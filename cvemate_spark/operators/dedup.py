@@ -627,20 +627,34 @@ def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
     exhausting `max_iter` without a fixpoint still raises instead of
     returning wrong labels.
 
+    Round bound: Kiveris et al. prove the alternation converges in
+    O(log² n) rounds on n nodes; the O(log n) rounds seen in practice
+    are not proven. The default `max_iter=24` is therefore a LOUD
+    BACKSTOP, not a proven cover for every n: a graph that needs more
+    rounds raises instead of returning unconverged labels.
+
     All work runs over the EDGE relation, which is near-dup-density-
     sized, orders of magnitude below the corpus, and shrinks per
-    round. Convergence is an exact edge-set fixpoint test (count +
-    exceptAll emptiness on consecutive canonical downward edge sets —
-    driver-side probes, the standard iterative control flow).
-    `localCheckpoint` truncates the growing lineage each round so the
-    plan does not deepen per iteration.
+    round. Convergence is a structural test on the round's output:
+    every arc points downward (a > b), so the graph is final exactly
+    when it is a STAR FOREST — no node has two out-arcs and no arc's
+    head has an out-arc. Large-star and small-star both preserve
+    connectivity, so each star is one whole component and its root,
+    the minimum of the star, is the component minimum. The test is
+    one groupBy(node) plus a limit(1) emptiness probe: one action per
+    round, and no confirming round that re-derives an unchanged edge
+    set. Each round's edges are `localCheckpoint(eager=False)`: the
+    checkpoint's last stage runs inside the probe's job instead of a
+    job of its own, the lineage is still cut per round (the plan does
+    not deepen per iteration), and the next round reads the
+    checkpointed blocks.
     """
     fwd = pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
     # undirected representation: both arcs of every pair
     edges = (
         fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
 
     def _min_star(e: DataFrame) -> DataFrame:
@@ -654,8 +668,20 @@ def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
 
-    prev: DataFrame | None = None
-    prev_n = -1
+    def _is_star_forest(e: DataFrame) -> bool:
+        # per node: out-degree and whether it is some arc's head; a
+        # violation is two out-arcs, or an out-arc from a head
+        deg = (
+            e.select("a", F.lit(1).alias("o"), F.lit(0).alias("i"))
+            .unionByName(e.select(
+                F.col("b").alias("a"), F.lit(0).alias("o"), F.lit(1).alias("i")
+            ))
+            .groupBy("a")
+            .agg(F.sum("o").alias("o"), F.max("i").alias("i"))
+        )
+        bad = (F.col("o") > 1) | ((F.col("o") == 1) & (F.col("i") == 1))
+        return deg.filter(bad).limit(1).count() == 0
+
     for _ in range(max_iter):
         # large-star: (u, m(v)) for u in N(v) with u > v, plus the
         # anchor (v, m(v)); output arcs all point DOWNWARD (a > b)
@@ -669,7 +695,6 @@ def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
             ls.unionByName(m.select("a", F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint()
         )
         # small-star: (u, m(v)) for u in N(v) with u <= v
         e2u = _both(e2)
@@ -683,18 +708,9 @@ def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
             ss.unionByName(m2.select("a", F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
-        # fixpoint: the canonical downward edge set is unchanged by a
-        # full round — at that point the graph is a star forest whose
-        # roots are the component minima (both probes scan the
-        # checkpointed relation, no recompute)
-        n3 = e3.count()
-        if (
-            prev is not None
-            and n3 == prev_n
-            and e3.exceptAll(prev).limit(1).count() == 0
-        ):
+        if _is_star_forest(e3):
             members = e3.select(
                 F.col("a").alias("doc_id"), F.col("b").alias("component")
             )
@@ -704,7 +720,6 @@ def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
                 .withColumn("component", F.col("doc_id"))
             )
             return members.unionByName(roots)
-        prev, prev_n = e3, n3
         edges = _both(e3)
     raise RuntimeError(
         f"dedup_components: no fixpoint after {max_iter} rounds — "

@@ -496,11 +496,15 @@ def vacuum_versions(
 BUCKET_META = "_BUCKETS"  # leading underscore: invisible to Spark scans
 
 
+def _bucket_of(c: F.Column, n_buckets: int) -> F.Column:
+    return F.pmod(F.xxhash64(c.cast("string")), F.lit(n_buckets))
+
+
 def bucket_expr(key: str, n_buckets: int) -> F.Column:
     """Deterministic bucket id: pmod(xxhash64(key-as-string), n).
     xxhash64 is a fixed algorithm (stable across sessions/versions), so
     every merge recomputes the same bucket for the same key."""
-    return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets))
+    return _bucket_of(F.col(key), n_buckets)
 
 
 def bucket_membership_expr(
@@ -520,18 +524,16 @@ def bucket_membership_expr(
 
 
 def bucket_of_value(spark: SparkSession, value, n_buckets: int) -> int:
-    """The bucket id of ONE literal key — the same xxhash64/pmod as
-    bucket_expr, evaluated JVM-side on a 1-row frame so point lookups
-    can never drift from the write path's bucketing (there is exactly
-    one implementation of the hash)."""
+    """The bucket id of ONE literal key — the same Catalyst expression
+    as bucket_expr, so point lookups can never drift from the write
+    path's bucketing (there is exactly one implementation of the hash).
+    It is projected over a one-row LocalRelation: ConvertToLocalRelation
+    and constant folding reduce the plan to a LocalTableScan, which
+    collect() answers on the driver WITHOUT a Spark job (over
+    spark.range(1) every lookup paid a 4-task job for one hash)."""
     return (
-        spark.range(1)
-        .select(
-            F.pmod(
-                F.xxhash64(F.lit(value).cast("string")),
-                F.lit(n_buckets),
-            ).alias("b")
-        )
+        spark.sql("VALUES (0)")
+        .select(_bucket_of(F.lit(value), n_buckets).alias("b"))
         .collect()[0][0]
     )
 

@@ -4952,12 +4952,16 @@ def _feed_across_rebucket(
     # projected to BOTH layouts' bucket ids inside the same collect
     # (the bucket projections used to be two more 32-partition shuffle
     # jobs each over a stats-less local relation, guide §1.2/§2.4), and
-    # the rows are memoized per (sub-span, layouts) so a containing
-    # span (1→4) re-uses a sub-span's (3→4) collected diff instead of
-    # recomputing its full-outer join — the driver-side analogue of a
-    # ReusedExchange, scoped to one change_feed call tree.
+    # the rows are memoized per (table, bucket key, sub-span, layouts)
+    # so a containing span (1→4) re-uses a sub-span's (3→4) collected
+    # diff instead of recomputing its full-outer join — the
+    # driver-side analogue of a ReusedExchange, scoped to one
+    # change_feed call tree.
     def _sub_keys(f, va, vb):
-        mk = ("subfeed_keys", va, vb, n_from, n_to, tuple(keys))
+        mk = (
+            "subfeed_keys", path, bucket_key, va, vb, n_from, n_to,
+            tuple(keys),
+        )
         if memo is not None and mk in memo:
             return memo[mk]
         rows = (
@@ -4985,7 +4989,12 @@ def _feed_across_rebucket(
             seen[tuple(r[k] for k in keys)] = (r["__b_from"], r["__b_to"])
     if not seen:
         return None
-    kdf = spark.createDataFrame(sorted(seen), key_schema)
+    # NULL-safe order: a NULL key column sorts last instead of raising
+    # TypeError on a None-vs-value comparison
+    kdf = spark.createDataFrame(
+        sorted(seen, key=lambda t: tuple((v is None, v) for v in t)),
+        key_schema,
+    )
     b_from = sorted({v[0] for v in seen.values()})
     b_to = sorted({v[1] for v in seen.values()})
     if metrics is not None:
@@ -5015,9 +5024,13 @@ def _feed_across_rebucket(
     # ExistingRDD and each semi-join becomes a full shuffle +
     # sort-merge of the SLICE side (guide §3.1) — measured 4 extra
     # Exchanges + 4 SortMergeJoin legs in the executed plan.
-    old_df = old_df.join(F.broadcast(kdf), on=keys, how="semi")
-    new_df = new_df.join(F.broadcast(kdf), on=keys, how="semi")
-    return aligned_diff(old_df, new_df)
+    # NULL-safe key match: a changed key with a NULL column must keep
+    # its rows in both slices, as the same-layout diff would read them
+    def _semi(df: DataFrame) -> DataFrame:
+        k = F.broadcast(kdf)
+        return df.join(k, [df[c].eqNullSafe(k[c]) for c in keys], "semi")
+
+    return aligned_diff(_semi(old_df), _semi(new_df))
 
 
 def change_feed(

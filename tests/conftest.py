@@ -22,7 +22,8 @@ from cvemate_spark.session import get_spark  # noqa: E402
 # already carry their authors' @pytest.mark.slow decorators; their law
 # classes keep deterministic coverage via test_merge_laws /
 # test_dedup_laws' unmarked members. Maintained as a name list so a renamed test
-# silently falls back INTO the default profile — the safe direction.
+# falls back INTO the default profile — the safe direction — and
+# _guard_slow_list fails the collection on the stale entry it leaves.
 # The full battery runs via tools/battery.py (-m "slow or not slow").
 SLOW_TESTS = {
     "test_full_verify_green_for_every_scale_bound_query",
@@ -80,6 +81,36 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.name.split("[")[0] in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    _guard_slow_list(items)
+
+
+def _guard_slow_list(items):
+    """Keep SLOW_TESTS honest when the whole suite is collected: every
+    listed name must still match a test (a stale entry hides nothing
+    but misleads), and no law class — a test module — may have every
+    member listed, or the default profile loses that class entirely.
+    A partial run (one file, one node id) collects a subset and is not
+    checked."""
+    here = Path(__file__).resolve().parent
+    by_module: dict[str, set[str]] = {}
+    for item in items:
+        by_module.setdefault(Path(str(item.path)).name, set()).add(
+            item.name.split("[")[0]
+        )
+    if set(by_module) != {p.name for p in here.glob("test_*.py")}:
+        return
+    collected = set().union(*by_module.values())
+    problems = [
+        f"SLOW_TESTS names no collected test: {name}"
+        for name in sorted(SLOW_TESTS - collected)
+    ] + [
+        f"every test of {module} is in SLOW_TESTS: the default profile "
+        "would keep no member of that law class"
+        for module, names in sorted(by_module.items())
+        if names <= SLOW_TESTS
+    ]
+    if problems:
+        raise pytest.UsageError("\n".join(problems))
 
 
 @pytest.fixture(scope="session")

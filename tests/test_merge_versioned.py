@@ -3267,6 +3267,97 @@ def test_change_feed_two_rebuckets_compose(spark, tmp_path):
     )
 
 
+def test_change_feed_rebucket_null_key_column(spark, tmp_path):
+    """A rebucket-spanning feed whose changed keys include a NULL key
+    column: the driver-side key set sorts NULL-safely (no TypeError on
+    (3, None) vs (3, 'a')) and the NULL-keyed rows reach the diff
+    through a NULL-safe key match, so the exact plan equals the
+    full-snapshot diff."""
+    from pyspark.sql import functions as F
+
+    from cvemate_spark.operators.merge import keep_latest_merge, table_diff
+    from cvemate_spark.operators.merge_versioned import (
+        change_feed, rebucket_versioned,
+    )
+
+    schema = "uid long, etype string, seq long, val string"
+    rows = [(u, t, 1, f"{u}-{t}-1") for u in range(10) for t in ("a", "b")]
+    base = spark.createDataFrame(rows + [(3, None, 1, "3-null-1")], schema)
+    path = str(tmp_path / "vbtnull")
+    write_bucket_table_versioned(base, path, key="uid", n_buckets=4)
+    keys = ["uid", "etype"]
+    merger = lambda cur, b: keep_latest_merge(  # noqa: E731
+        cur, b, keys=keys, order_by=[F.desc("seq")]
+    )
+    merge_scoped_versioned(spark, path, spark.createDataFrame(
+        [(3, "a", 2, "3-a-2"), (3, None, 2, "3-null-2")], schema
+    ), merger=merger)
+    rebucket_versioned(spark, path, 8)
+    merge_scoped_versioned(spark, path, spark.createDataFrame(
+        [(7, "b", 2, "7-b-2"), (8, None, 1, "8-null-1")], schema
+    ), merger=merger)
+    v = latest_version(path)
+
+    metrics = {}
+    feed = change_feed(spark, path, 1, v, key=keys, _metrics=metrics)
+    assert metrics["mode"] == "rebucket-exact"
+    assert metrics["changed_keys"] == 4
+    oracle = table_diff(
+        read_bucket_table_versioned(spark, path, 1),
+        read_bucket_table_versioned(spark, path, v),
+        key=keys,
+    )
+    cols = sorted(oracle.columns)
+
+    def _rows(df):
+        return sorted(
+            map(tuple, df.select(*cols).collect()),
+            key=lambda t: tuple((x is None, x) for x in t),
+        )
+
+    got = _rows(feed)
+    assert got == _rows(oracle)
+    assert any(r[cols.index("etype")] is None for r in got)
+
+
+def test_change_feed_memo_is_scoped_per_table(spark, tmp_path):
+    """The sub-feed memo is keyed by table path and bucket key: two
+    tables with the same version span and bucket counts sharing one
+    memo each get their own changed keys."""
+    from cvemate_spark.operators.merge import table_diff
+    from cvemate_spark.operators.merge_versioned import (
+        change_feed, rebucket_versioned,
+    )
+
+    paths = {}
+    for name, hot in (("ta", "CVE-1"), ("tb", "CVE-2")):
+        base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(20)})
+        path = str(tmp_path / name)
+        write_bucket_table_versioned(
+            merge_upsert(None, base, now=T0), path, key="id", n_buckets=4
+        )
+        up = _batch(spark, "nvd", {hot: "x"})
+        merge_scoped_versioned(spark, path, up, now=T1)
+        rebucket_versioned(spark, path, 8)
+        merge_scoped_versioned(spark, path, up.replace("x", "y"), now=T2)
+        paths[name] = path
+    assert {latest_version(p) for p in paths.values()} == {4}
+
+    memo = {}
+    for name, path in paths.items():
+        feed = change_feed(spark, path, 1, 4, _memo=memo)
+        oracle = table_diff(
+            read_bucket_table_versioned(spark, path, 1),
+            read_bucket_table_versioned(spark, path, 4),
+            key="id",
+        )
+        cols = sorted(oracle.columns)
+        assert sorted(map(tuple, feed.select(*cols).collect())) == sorted(
+            map(tuple, oracle.select(*cols).collect())
+        ), name
+    assert len(memo) == 4  # two sub-feeds per table, none shared
+
+
 def test_change_feed_reload_boundary_falls_back(spark, tmp_path):
     """A RELOAD that changes n_buckets is NOT content-neutral — the
     exact plan refuses (op != rebucket) and the feed falls back to the
