@@ -42,7 +42,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .merge_versioned import latest_version, read_bucket_table_versioned
+from .merge_versioned import (
+    BUCKET_META,
+    latest_version,
+    read_bucket_table_versioned,
+)
 
 
 def _cat_manifest(path: str, v: int) -> str:
@@ -523,7 +527,7 @@ def catalog_change_feed(
             # every replica). Keys come from the NEW table's meta
             # (override via `keys`); a rebind that also changes the
             # key column set fails loudly in the diff.
-            from .merge import BUCKET_META, table_diff
+            from .merge import table_diff
 
             if key is None:
                 with open(os.path.join(entry["path"], BUCKET_META)) as f:
@@ -639,8 +643,6 @@ def replicate_catalog(
             )
             key = (keys or {}).get(name)
             if key is None:
-                from .merge import BUCKET_META
-
                 with open(
                     os.path.join(
                         _cat_load(path, target)["tables"][name]["path"],

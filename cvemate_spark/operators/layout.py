@@ -27,8 +27,6 @@ fragment so the z-key computation is oracle-gated (e_zorder).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -291,35 +289,3 @@ def read_pruned_partitioned(
         )
         .drop("_zb")
     )
-
-
-def compact_files(
-    spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict:
-    """Small-file compaction: rewrite a directory into ceil(bytes/target)
-    files when it is over-fragmented. Small files are the classic
-    object-store killer (per-file open cost dominates the scan); the
-    rewrite uses coalesce — NO shuffle, each output task concatenates
-    input splits — and lands via the versioned-snapshot sink so readers
-    never see a partial directory. No-op (returns unchanged stats) when
-    the layout is already within budget."""
-    from .merge import write_versioned
-
-    parts = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(".")
-    ]
-    total = sum(os.path.getsize(p) for p in parts)
-    want = max(1, -(-total // target_bytes))
-    if want >= len(parts):
-        return {"files": len(parts), "bytes": total, "compacted": False}
-    df = spark.read.parquet(path).coalesce(want)
-    version = write_versioned(df, path + ".compacted")
-    return {
-        "files": len(parts),
-        "bytes": total,
-        "compacted": True,
-        "out_files": want,
-        "version": version,
-    }

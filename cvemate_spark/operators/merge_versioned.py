@@ -1,21 +1,21 @@
 """Versioned bucket table: cross-bucket atomic scoped merges + time travel.
 
-Composes the two sink protocols `operators/merge.py` ships separately:
+The one table format of this package. It gives two properties at
+once:
 
-* `merge_scoped` — merge cost ∝ batch (only touched bucket dirs are
-  rewritten), but its per-bucket two-rename swaps commit one bucket at
-  a time: a reader scanning during a multi-bucket merge can observe
-  bucket 3 post-merge and bucket 7 pre-merge, and a crash mid-swap
-  leaves that mix on disk.
-* `write_versioned` — an atomic manifest-pointer commit with time
-  travel, but each version is a full snapshot: write cost ∝ table.
+* merge cost ∝ batch — only the hash(key) buckets a batch touches get
+  new files (the reference's point-update economics,
+  mongodb_handler.py:141-195), untouched buckets are carried by
+  manifest reference;
+* an atomic cross-bucket commit with time travel — a reader never
+  sees one bucket post-merge and another pre-merge, a crash before
+  the pointer replace is invisible, and every committed version stays
+  readable until vacuumed.
 
-This module gives both properties at once — the production story a
-cluster user doing concurrent scoped merges plus time travel needs
-(the reference's point-update economics, mongodb_handler.py:141-195,
-under a snapshot-isolation commit). Same design as Delta/Iceberg:
-data files are IMMUTABLE, commits only add files and atomically
-publish a new manifest.
+Same design as Delta/Iceberg: data files are IMMUTABLE, commits only
+add files and atomically publish a new manifest. The merge semantics
+(`merge_upsert*`, `keep_latest_merge`) and the bucket hash come from
+`operators/merge.py`.
 
 Layout under `path/`:
     _BUCKETS                   layout meta {key, n_buckets, versioned,
@@ -71,11 +71,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .merge import (
-    BUCKET_META,
     bucket_expr,
     merge_upsert,
     merge_upsert_deletes,
 )
+
+BUCKET_META = "_BUCKETS"  # table layout meta (underscore: invisible to scans)
 
 
 def _manifest_path(path: str, v: int) -> str:
@@ -2132,9 +2133,10 @@ def _commit(
     crashing anywhere earlier leaves NO manifest, so its generations
     are unreferenced orphans (vacuumable) and its version number was
     never part of the readable history. The pointer replace (os.replace
-    of a FILE, atomic on POSIX) is monotonic, same rule as
-    merge.py::_advance_pointer; older manifests get a supersession
-    marker so vacuum's grace clock runs on time-since-displaced."""
+    of a FILE, atomic on POSIX) is monotonic — it only ever moves to a
+    higher version, so a slower committer can never roll it back;
+    older manifests get a supersession marker so vacuum's grace clock
+    runs on time-since-displaced."""
     import fcntl
 
     tmp = os.path.join(path, f"_LATEST.tmp-{uuid.uuid4().hex[:8]}")
@@ -2266,8 +2268,7 @@ def write_bucket_table_versioned(
     """Full load: generation dirs for every non-empty bucket, one
     manifest, pointer published. On a FRESH path this commits v-1; on
     an EXISTING table it commits a full-snapshot RELOAD as the next
-    version (the recovery action merge.py::write_bucket_table supports
-    by replacing the directory — here the old versions additionally
+    version (the recovery / complete-output action; the old versions
     stay time-travelable until vacuumed). A reload may change
     n_buckets (manifests carry their own layout) but never the KEY:
     older manifests would become unreadable by point lookups, so a
@@ -2406,7 +2407,8 @@ def init_bucket_table_versioned(
 ) -> int:
     """Metadata-only creation of an EMPTY versioned table: meta, an
     empty manifest v-1, pointer — no Spark job (the CDC-replay shape
-    starts from nothing; see merge.py::init_bucket_table).
+    starts from nothing, and a distributed write of zero rows is pure
+    fixed overhead per stream start).
     `constraints` are recorded for every future merge to enforce —
     nothing to check yet on an empty table. Init on an EXISTING table
     is ensure-exists: the committed table wins untouched (rewriting
@@ -4621,10 +4623,9 @@ def changed_buckets_between(
 ) -> list[int]:
     """Bucket ids whose generation changed between two committed
     versions — pure manifest arithmetic, no scan, no clocks. The
-    version number IS the consumer's watermark: unlike timestamp
-    freshness (merge.py::changed_buckets_since) there is no precision
-    or clock-skew surface at all, and a layout change (rebucket)
-    degrades safely to "everything changed".
+    version number IS the consumer's watermark: unlike a timestamp
+    watermark there is no precision or clock-skew surface at all, and
+    a layout change (rebucket) degrades safely to "everything changed".
 
     Sharded (format-2) manifests diff at the ROOT first: a shard whose
     content-addressed file reference is identical in both versions is
@@ -5190,8 +5191,8 @@ def vacuum_bucket_versions(
     (never the committed one, never a `pin`ned version — the hook
     external snapshot holders use: catalogs pass
     catalog_referenced_versions so joint time travel survives member
-    vacuums — never inside their post-supersession grace window,
-    merge.py::vacuum_versions' retention contract), then delete
+    vacuums — never inside their post-supersession grace window, the
+    rule Delta's deletedFileRetentionDuration runs on), then delete
     generation dirs no surviving manifest references and whose mtime
     is older than `grace_seconds` (covers orphans from crashed merges
     without racing one that just finished writing).

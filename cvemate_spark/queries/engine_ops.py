@@ -1603,51 +1603,65 @@ def e_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY version, event_type, cnt
     """,
     doc="Versioned-snapshot time travel through the driver gate: two "
-    "commits to the manifest-pointer sink (operators/merge.py::"
-    "write_versioned — immutable v-N dirs, atomic _LATEST replace), "
-    "then BOTH versions read back via read_versioned(version=...), "
-    "proving commit monotonicity and that an old snapshot stays "
-    "byte-stable after later commits — the Delta/Iceberg time-travel "
-    "contract at filesystem scale. Oracle recomputes each version's "
-    "content from events (v1 = even event_ids, v2 = all). Scratch is "
-    "keyed by the source file identity, so a testdata regen rebuilds "
-    "instead of serving stale versions.",
+    "commits to the versioned bucket table (operators/merge_versioned.py"
+    "::write_bucket_table_versioned — a fresh load commits v1, the "
+    "full-snapshot reload commits v2; immutable generations, one "
+    "manifest + atomic _LATEST replace each), then BOTH versions read "
+    "back via read_bucket_table_versioned(version=...), proving commit "
+    "monotonicity and that an old snapshot stays byte-stable after "
+    "later commits — the Delta/Iceberg time-travel contract at "
+    "filesystem scale. Oracle recomputes each version's content from "
+    "events (v1 = even event_ids, v2 = all). Scratch is keyed by the "
+    "source file identity, so a testdata regen rebuilds instead of "
+    "serving stale versions.",
 )
 def e_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
-    from ..operators.merge import read_versioned, write_versioned
+    from ..operators.merge_versioned import (
+        latest_version,
+        read_bucket_table_versioned,
+        write_bucket_table_versioned,
+    )
 
     ev = load_table(spark, sf_dir, "events")
     st = os.stat(f"{sf_dir}/events.parquet")
     key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:tt-v1".encode()
+        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:tt-v2".encode()
     ).hexdigest()[:12]
     path = f"/root/repo/.scratch/timetravel_{key}"
 
     counts = lambda df: df.groupBy("event_type").agg(  # noqa: E731
         F.count("*").cast("long").alias("cnt")
     )
-    # Crash-safe cache gate: require BOTH committed version dirs, not
-    # just _LATEST — a failure between the v1 and v2 commits would
-    # otherwise leave _LATEST=1 and make every later run skip the
-    # writes and fail on read_versioned(version=2). A partial scratch
-    # dir is rebuilt from zero (version numbers must be exactly 1,2).
-    have_both = os.path.isdir(os.path.join(path, "v-1")) and os.path.isdir(
-        os.path.join(path, "v-2")
+    # Crash-safe cache gate: require the v2 commit, not just a pointer —
+    # a failure between the v1 and v2 commits would otherwise leave
+    # _LATEST=1 and make every later run skip the writes and fail on
+    # version=2. A partial scratch dir is rebuilt from zero (version
+    # numbers must be exactly 1,2).
+    have_both = (
+        os.path.exists(os.path.join(path, "_LATEST"))
+        and latest_version(path) >= 2
     )
     if not have_both:
         if os.path.isdir(path):
             import shutil
 
             shutil.rmtree(path)
-        write_versioned(counts(ev.filter(F.col("event_id") % 2 == 0)), path)
-        write_versioned(counts(ev), path)
-    v1 = read_versioned(spark, path, version=1).withColumn(
+        # a fresh path commits v1; the second call reloads it as v2
+        first = write_bucket_table_versioned(
+            counts(ev.filter(F.col("event_id") % 2 == 0)), path,
+            key="event_type", n_buckets=1,
+        )
+        second = write_bucket_table_versioned(
+            counts(ev), path, key="event_type", n_buckets=1
+        )
+        assert (first, second) == (1, 2), (first, second)
+    v1 = read_bucket_table_versioned(spark, path, version=1).withColumn(
         "version", F.lit(1).cast("int")
     )
-    v2 = read_versioned(spark, path, version=2).withColumn(
+    v2 = read_bucket_table_versioned(spark, path, version=2).withColumn(
         "version", F.lit(2).cast("int")
     )
     return (
@@ -1686,28 +1700,33 @@ INS_OFFSET = 900_000_000  # synthetic insert keys, disjoint from orders
            CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
     FROM merged GROUP BY status ORDER BY status
     """,
-    doc="Bucket-scoped OP-MERGE (operators/merge.py::merge_scoped): the "
-    "orders table is laid out as 32 hash(key)-bucketed partition "
-    "directories, then a mixed update+insert batch (every 97th key "
-    "repriced, every 997th key's synthetic twin inserted) is merged by "
-    "rewriting ONLY the bucket dirs the batch touches — the "
-    "reference's point-update economics (mongodb_handler.py:141-195, "
-    "each UpdateOne touches only matched documents) at file "
-    "granularity, vs write_atomic's whole-table rewrite. The returned "
-    "aggregate proves the merged CONTENT equals the plain full-outer "
-    "merge the oracle computes; the scoping law (untouched buckets "
-    "physically untouched, cost ∝ batch) is pinned in "
-    "tests/test_merge_laws.py and measured in MERGEBENCH.json. At "
-    "100 TB this bounds nightly-merge writes by the batch footprint, "
-    "not the corpus.",
+    doc="Bucket-scoped OP-MERGE (operators/merge_versioned.py::"
+    "merge_scoped_versioned): the orders table is loaded as a 32-bucket "
+    "hash(key) versioned table, then a mixed update+insert batch (every "
+    "97th key repriced, every 997th key's synthetic twin inserted) is "
+    "merged by writing new generations for ONLY the buckets the batch "
+    "touches — the reference's point-update economics "
+    "(mongodb_handler.py:141-195, each UpdateOne touches only matched "
+    "documents) at file granularity, vs write_atomic's whole-table "
+    "rewrite. The returned aggregate proves the merged CONTENT equals "
+    "the plain full-outer merge the oracle computes; the scoping law "
+    "(untouched buckets physically untouched, cost ∝ batch) is pinned "
+    "in tests/test_merge_laws.py and tests/test_merge_versioned.py and "
+    "measured in MERGEBENCH.json. At 100 TB this bounds nightly-merge "
+    "writes by the batch footprint, not the corpus. "
+    "e_merge_scoped_versioned extends the same build with a delete "
+    "merge and time travel over all three versions.",
 )
 def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
     import shutil
 
-    from ..operators.merge import (
-        merge_scoped, merge_upsert, read_bucket_table, write_bucket_table,
+    from ..operators.merge import merge_upsert
+    from ..operators.merge_versioned import (
+        merge_scoped_versioned,
+        read_bucket_table_versioned,
+        write_bucket_table_versioned,
     )
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1715,7 +1734,7 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     st = os.stat(f"{sf_dir}/orders.parquet")
     key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:ms-v2".encode()
+        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:ms-v3".encode()
     ).hexdigest()[:12]
     path = f"/root/repo/.scratch/mscope_{key}"
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
@@ -1723,10 +1742,8 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.isdir(path):
             shutil.rmtree(path)
         # initial load through merge_upsert(None, ...) so every bucket
-        # file carries the audit columns from day one — merged and
-        # untouched buckets then share one schema (no parquet
-        # schema-merge dependence on which file the reader samples)
-        write_bucket_table(
+        # generation carries the audit columns from day one
+        write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
         )
@@ -1741,12 +1758,12 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        stats = merge_scoped(spark, path, batch, now=T_MERGE)
+        stats = merge_scoped_versioned(spark, path, batch, now=T_MERGE)
         assert 0 < stats["buckets_touched"] <= MS_BUCKETS
         with open(done, "w") as f:
             f.write(str(stats))
     return (
-        read_bucket_table(spark, path)
+        read_bucket_table_versioned(spark, path)
         .groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count("*").cast("long").alias("cnt"),
@@ -1806,11 +1823,11 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hist GROUP BY version, status ORDER BY version, status
     """,
     doc="Versioned bucket table (operators/merge_versioned.py): scoped "
-    "merges with a cross-bucket ATOMIC commit + time travel — the "
-    "composition of merge_scoped's batch-bounded write cost with "
-    "write_versioned's manifest-pointer snapshot protocol (VERDICT r8 "
-    "item 2; the reference's point-update economics, "
-    "mongodb_handler.py:141-195, under snapshot isolation). Three "
+    "merges with a cross-bucket ATOMIC commit + time travel — "
+    "batch-bounded write cost (only touched buckets get new "
+    "generations) under one manifest-pointer commit per merge (the "
+    "reference's point-update economics, mongodb_handler.py:141-195, "
+    "under snapshot isolation). Three "
     "committed versions are built (initial orders load; an "
     "update+insert merge; an update+DELETE merge through the tombstone "
     "leg), then ALL THREE are read back via time travel and "

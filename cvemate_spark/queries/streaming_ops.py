@@ -83,18 +83,19 @@ def s3_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, event_type, event_id, ts
     """,
     doc="S17: the S3 out-of-order replay landing through BUCKET-SCOPED "
-    "merges (operators/merge.py::merge_scoped with the keep-latest "
-    "merger) — CDC into a hash(user_id)-bucketed table where each "
-    "micro-batch reads/re-ranks/swaps ONLY its users' bucket dirs. "
-    "Same convergence oracle as S3 (batch Q20 keep-latest): the hash "
-    "gate proves that scoping the rewrite changes nothing, while "
-    "per-batch merge cost is bounded by the batch's bucket footprint "
-    "— at 100 TB the difference between a nightly CDC landing that "
-    "rewrites gigabytes and one that rewrites the table. "
-    "streaming/jobs.py::scoped_replay.",
+    "merges (operators/merge_versioned.py::merge_scoped_versioned with "
+    "the keep-latest merger) — CDC into a hash(user_id)-bucketed table "
+    "where each micro-batch reads/re-ranks/rewrites ONLY its users' "
+    "buckets and commits them atomically. Same convergence oracle as "
+    "S3 (batch Q20 keep-latest): the hash gate proves that scoping the "
+    "rewrite changes nothing, while per-batch merge cost is bounded by "
+    "the batch's bucket footprint — at 100 TB the difference between a "
+    "nightly CDC landing that rewrites gigabytes and one that rewrites "
+    "the table. Same builder as S18 (streaming/jobs.py::"
+    "scoped_replay_versioned); the name is kept for the gate history.",
 )
 def s17_scoped_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.scoped_replay(spark, sf_dir).orderBy(
+    return jobs.scoped_replay_versioned(spark, sf_dir).orderBy(
         "user_id", "event_type", "event_id", "ts"
     )
 
@@ -110,12 +111,12 @@ def s17_scoped_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn = 1
     ORDER BY user_id, event_type, event_id, ts
     """,
-    doc="S18: the S17 bucket-scoped CDC replay landing through the "
-    "VERSIONED table (operators/merge_versioned.py) — every "
-    "micro-batch commits atomically (new generations for touched "
+    doc="S18: the S3 out-of-order replay landing through bucket-scoped "
+    "merges into the VERSIONED table (operators/merge_versioned.py) — "
+    "every micro-batch commits atomically (new generations for touched "
     "buckets + one manifest/pointer replace), so a reader racing the "
     "replay sees exact batch boundaries (version n = first n-1 "
-    "batches), never S17's transient half-swapped bucket mix, and "
+    "batches), never a half-merged bucket mix, and "
     "every boundary stays time-travelable for replay debugging. Same "
     "keep-latest semantics and the same batch Q20 convergence oracle "
     "as S3/S17; the builder asserts the commit history is exactly "

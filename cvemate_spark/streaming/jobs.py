@@ -227,83 +227,28 @@ def replay_merge(spark: SparkSession, sf_dir: str, n_chunks: int = 2) -> DataFra
     )
 
 
-def scoped_replay(spark: SparkSession, sf_dir: str, n_chunks: int = 2) -> DataFrame:
-    """S17: the S3 out-of-order replay landing through BUCKET-SCOPED
-    merges — the CDC-into-a-bucketed-table shape a 100 TB ingest runs.
-
-    Same chunked landing and keep-latest CDC semantics as S3, but the
-    target is the hash(user_id)-bucketed table and each micro-batch
-    merges via `merge_scoped`: only the bucket directories holding the
-    batch's users are read, re-ranked, and swapped. Scoping is sound
-    for the per-(user_id, event_type) keep-latest window because the
-    bucket key (user_id) FUNCTIONALLY DETERMINES the window partition
-    key's bucket: every row that can compete with a batch row lives in
-    that row's own bucket, so the touched-slice window is complete.
-    Convergence law unchanged: the merge is commutative across batch
-    orderings, so the replayed table equals the batch Q20 keep-latest
-    (the same oracle S3 uses); merge cost per micro-batch is bounded
-    by the batch's bucket footprint, not the table.
-    """
-    from ..operators.merge import (
-        init_bucket_table, keep_latest_merge, merge_scoped, read_bucket_table,
-    )
-
-    _ensure_session_confs(spark)
-    in_dir = _chunked_landing(spark, sf_dir, n_chunks=n_chunks)
-
-    run_dir = f"{SCRATCH}/s17_{os.getpid()}"
-    target, ckpt = f"{run_dir}/target", f"{run_dir}/ckpt"
-    shutil.rmtree(run_dir, ignore_errors=True)
-    os.makedirs(run_dir)
-    # empty bucket table, keyed on user_id (16 buckets at test scale;
-    # at 100 TB: n_buckets ∝ table size, same layout). Metadata-only
-    # init: materializing zero rows with a distributed write was ~1 s
-    # of fixed overhead per stream start (VERDICT r8 item 7).
-    init_bucket_table(target, key="user_id", n_buckets=16)
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        merge_scoped(
-            batch.sparkSession,
-            target,
-            batch,
-            merger=lambda cur, b: keep_latest_merge(
-                cur,
-                b,
-                keys=["user_id", "event_type"],
-                order_by=[F.desc("ts"), F.desc("event_id")],
-            ),
-        )
-
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_bucket_table(spark, target).select(
-        "user_id",
-        "event_type",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-    )
-
-
 def scoped_replay_versioned(
     spark: SparkSession, sf_dir: str, n_chunks: int = 2
 ) -> DataFrame:
-    """S18: the S17 bucket-scoped CDC replay landing through the
-    VERSIONED table (merge_scoped_versioned) — every micro-batch is one
-    atomic cross-bucket commit, so a downstream reader racing the
-    replay always sees a complete batch boundary (version n = exactly
-    the first n-1 batches applied), never a half-merged mix of bucket
-    directories, and any intermediate state remains time-travelable
-    for replay debugging. Same keep-latest CDC semantics and the same
-    batch Q20 convergence oracle as S3/S17; per-batch write cost is
-    still bounded by the batch's bucket footprint (new generations for
+    """S17/S18: the S3 out-of-order replay landing through BUCKET-SCOPED
+    merges into the VERSIONED table (merge_scoped_versioned) — the
+    CDC-into-a-bucketed-table shape a 100 TB ingest runs.
+
+    Same chunked landing and keep-latest CDC semantics as S3, but the
+    target is the hash(user_id)-bucketed table and each micro-batch
+    reads, re-ranks and rewrites only the buckets holding the batch's
+    users. Scoping is sound for the per-(user_id, event_type)
+    keep-latest window because the bucket key (user_id) FUNCTIONALLY
+    DETERMINES the window partition key's bucket: every row that can
+    compete with a batch row lives in that row's own bucket, so the
+    touched-slice window is complete. Every micro-batch is one atomic
+    cross-bucket commit, so a downstream reader racing the replay
+    always sees a complete batch boundary (version n = exactly the
+    first n-1 batches applied), and any intermediate state remains
+    time-travelable for replay debugging. The merge is commutative
+    across batch orderings, so the replayed table equals the batch Q20
+    keep-latest (the same oracle S3 uses); per-batch write cost is
+    bounded by the batch's bucket footprint (new generations for
     touched buckets only + one manifest/pointer commit).
     """
     from ..operators.merge import keep_latest_merge
@@ -1142,9 +1087,10 @@ def checkpoint_resume_counts(
     The final complete-mode emission therefore equals the batch
     aggregate over all events — true only if both the offset log and
     the state store survive the restart, which is exactly the law.
-    foreachBatch lands each complete emission through the versioned
-    snapshot sink (atomic pointer commit), so a reader never sees a
-    half-written result — the same sink discipline s3 uses.
+    foreachBatch lands each complete emission as a full-snapshot
+    reload of a one-bucket versioned table (one manifest + atomic
+    pointer commit per emission), so a reader never sees a
+    half-written result and every emission stays time-travelable.
 
     `workdir=None` uses content-keyed scratch dirs: a re-run finds the
     drained checkpoint, both phases no-op on input, and the sink's
@@ -1165,14 +1111,17 @@ def checkpoint_resume_counts(
     """
     import pyarrow.parquet as pq
 
-    from ..operators.merge import read_versioned, write_versioned
+    from ..operators.merge_versioned import (
+        read_bucket_table_versioned,
+        write_bucket_table_versioned,
+    )
 
     _ensure_session_confs(spark)
     stage = _stage_events(sf_dir)
     if workdir is None:
         st = os.stat(f"{stage}/events.parquet")
         key = hashlib.md5(
-            f"{stage}:{st.st_size}:{st.st_mtime_ns}:resume-v1".encode()
+            f"{stage}:{st.st_size}:{st.st_mtime_ns}:resume-v2".encode()
         ).hexdigest()[:12]
         workdir = f"{SCRATCH}/resume_{key}"
     src_dir = f"{workdir}/source"
@@ -1202,7 +1151,11 @@ def checkpoint_resume_counts(
         )
         q = (
             counts.writeStream.outputMode("complete")
-            .foreachBatch(lambda batch, _id: write_versioned(batch, sink))
+            .foreachBatch(
+                lambda batch, _id: write_bucket_table_versioned(
+                    batch, sink, key="event_type", n_buckets=1
+                )
+            )
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -1234,7 +1187,7 @@ def checkpoint_resume_counts(
         ensure_chunk("chunk_b", tbl.slice(half))
         run_phase(2)  # restart: offset log skips chunk_a, state resumes
 
-    return read_versioned(spark, sink).select(
+    return read_bucket_table_versioned(spark, sink).select(
         "event_type", F.col("cnt").cast("long").alias("cnt")
     )
 

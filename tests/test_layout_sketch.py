@@ -7,26 +7,22 @@ properties that make per-day sketch rollup sound at 100 TB.
 Layout (operators/layout.py): z-order clustering must (a) preserve the
 data, (b) produce per-file bounding boxes tight enough that a small
 query box PRUNES files from the manifest, and (c) beat a single-column
-sort layout on 2-D pruning — the reason z-order exists. Compaction
-must preserve rows while reducing file count, and be a no-op when the
-layout is already within budget.
+sort layout on 2-D pruning — the reason z-order exists. Table
+compaction is a versioned-table operation (compact_versioned, laws in
+tests/test_merge_versioned.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from cvemate_spark.operators.layout import (
-    compact_files,
     file_stats,
     prune_files,
     read_pruned,
     write_zordered,
     zorder_expr_spark,
 )
-from cvemate_spark.operators.merge import read_versioned
 from cvemate_spark.operators.sketch import cms_build, cms_estimate, cms_merge
 from cvemate_spark.tables import load_table
 
@@ -114,33 +110,6 @@ def test_zorder_expr_interleaves_bits(spark):
     )
     # x bits land on even positions, y bits on odd: 1010 ⨉ 0101 -> 01100110
     assert df.collect()[0]["z"] == 0b01100110
-
-
-def test_compaction_preserves_rows_reduces_files_and_noops_when_tight(spark, tmp_path):
-    ev = _quantized_events(spark)
-    frag = str(tmp_path / "frag")
-    ev.repartition(16).write.parquet(frag)
-    n_before = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
-    assert n_before == 16
-
-    stats = compact_files(spark, frag, target_bytes=1 << 30)
-    assert stats["compacted"] is True and stats["out_files"] == 1
-    out = read_versioned(spark, frag + ".compacted")
-    assert sorted(r["event_id"] for r in out.collect()) == sorted(
-        r["event_id"] for r in ev.collect()
-    )
-    n_after = len(
-        [
-            f
-            for f in os.listdir(os.path.join(frag + ".compacted", f"v-{stats['version']}"))
-            if f.endswith(".parquet")
-        ]
-    )
-    assert n_after == 1 < n_before
-
-    # a directory already within budget is untouched
-    again = compact_files(spark, frag, target_bytes=1)
-    assert again["compacted"] is False
 
 
 def test_hll_sketch_rollup_is_mergeable_and_close(spark):

@@ -2267,7 +2267,28 @@ def test_compact_versioned_content_neutral_and_vacuum(spark, tmp_path):
     pre_rows, pre_cols = _rows_sorted(
         read_bucket_table_versioned(spark, path)
     )
-    out = compact_versioned(spark, path)
+    # compaction is a read-then-commit over the current manifest, so it
+    # serializes on _MERGELOCK like every merger: while another holder
+    # has the lock it must not complete; it proceeds on release
+    import fcntl
+    import time
+
+    holder = open(os.path.join(path, "_MERGELOCK"), "w")
+    fcntl.flock(holder, fcntl.LOCK_EX)
+    done = {}
+    t = threading.Thread(
+        target=lambda: done.update(out=compact_versioned(spark, path))
+    )
+    t.start()
+    deadline = time.monotonic() + 1.0
+    while time.monotonic() < deadline:
+        assert "out" not in done, "compact_versioned ignored _MERGELOCK"
+        time.sleep(0.05)
+    assert latest_version(path) == pre_v
+    fcntl.flock(holder, fcntl.LOCK_UN)
+    holder.close()
+    t.join(timeout=120)
+    out = done["out"]
     assert out["buckets_compacted"] >= 1
     full = mv._load_manifest_full(path, latest_version(path))
     assert not full.get("deltas") and not full.get("dv")

@@ -1,23 +1,24 @@
 #!/usr/bin/env python3
 """Merge-cost scaling bench: bucket-scoped merge vs whole-table rewrite.
 
-The contract under measurement (VERDICT r7 item 3, r8 items 3/6): with
-the bucket-scoped layout, merge cost is bounded by the BATCH footprint
-(buckets touched x bucket size), not the TARGET size — the reference's
-point-update economics (mongodb_handler.py:141-195) at file
-granularity. The old `merge_upsert` + `write_atomic` path rewrites the
+The contract under measurement (VERDICT r7 item 3, r8 items 3/6): on
+the versioned bucket table, merge cost is bounded by the BATCH
+footprint (buckets touched x bucket size), not the TARGET size — the
+reference's point-update economics (mongodb_handler.py:141-195) at file
+granularity. The `merge_upsert` + `write_atomic` path rewrites the
 whole target directory per merge regardless of batch size.
 
-Measured per run:
-  * the batch-size ladder (uniform keys) — bytes_rewritten ∝ batch
+Measured per run, all through operators/merge_versioned.py:
+  * the batch-size ladder (uniform keys, merge_scoped_versioned) —
+    bytes_rewritten ∝ batch
   * a HOT-BUCKET batch (all keys hashing into ~1% of buckets, the
     zipf worst case): same row count as a uniform rung, so the skew
     delta is isolated (r8 item 6)
-  * one merge through the VERSIONED commit (merge_scoped_versioned) —
-    the atomicity premium over the in-place scoped swap
-  * compact_buckets cost after the ladder fragments the table
-  * freshness-manifest amortization: read_changed_since(checkpoint)
-    vs a full-table scan after a small merge
+  * incremental consumption: read_changed_between(checkpoint version)
+    vs a full-table scan after the hot merge
+  * compact_versioned cost after delta merges fragment every 64th
+    bucket
+  * merge-on-read rungs and the compaction that retires their deltas
   * the write_atomic whole-rewrite baseline
 
 Usage: python3 tools/mergebench.py [sf_dir] [n_buckets] [xN]
@@ -59,12 +60,12 @@ T2 = "2026-01-03 00:00:00"
 
 def main() -> None:
     from cvemate_spark.operators.merge import (
-        bucket_expr, compact_buckets, merge_scoped, merge_upsert,
-        read_bucket_table, read_changed_since, write_atomic,
-        write_bucket_table,
+        bucket_expr, merge_upsert, write_atomic,
     )
     from cvemate_spark.operators.merge_versioned import (
-        merge_scoped_versioned, write_bucket_table_versioned,
+        compact_versioned, merge_scoped_versioned,
+        merge_scoped_versioned_mor, read_bucket_table_versioned,
+        read_changed_between, write_bucket_table_versioned,
     )
     from cvemate_spark.session import get_spark
 
@@ -87,9 +88,11 @@ def main() -> None:
 
     shutil.rmtree(SCRATCH, ignore_errors=True)
     os.makedirs(SCRATCH)
-    path = f"{SCRATCH}/bucketed"
+    path = f"{SCRATCH}/versioned"
     t = time.monotonic()
-    write_bucket_table(base, path, key="o_orderkey", n_buckets=N_BUCKETS)
+    write_bucket_table_versioned(
+        base, path, key="o_orderkey", n_buckets=N_BUCKETS
+    )
     load_s = time.monotonic() - t
 
     # batch sizes as modulus filters: ~1/100000 .. ~1/10 of the keys
@@ -101,7 +104,7 @@ def main() -> None:
         )
         n_batch = batch.count()
         t = time.monotonic()
-        stats = merge_scoped(spark, path, batch, now=T1)
+        stats = merge_scoped_versioned(spark, path, batch, now=T1)
         dt = time.monotonic() - t
         results.append(
             {
@@ -131,8 +134,9 @@ def main() -> None:
         .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
     )
     n_hot = hot.count()
+    checkpoint = results[-1]["version"]  # consumer caught up to the ladder
     t = time.monotonic()
-    stats = merge_scoped(spark, path, hot, now=T2)
+    stats = merge_scoped_versioned(spark, path, hot, now=T2)
     dt = time.monotonic() - t
     results.append(
         {
@@ -147,18 +151,18 @@ def main() -> None:
     )
     print(json.dumps(results[-1]))
 
-    # ---- freshness-manifest amortization: an incremental consumer
-    # checkpointed at T1 reads only the hot merge's buckets vs a full
-    # scan (both forced with .count())
+    # ---- incremental consumption: a consumer checkpointed at the
+    # ladder's last version reads only the hot merge's buckets vs a
+    # full scan (both forced with .count())
     t = time.monotonic()
-    inc_rows = read_changed_since(spark, path, T1).count()
+    inc_rows = read_changed_between(spark, path, checkpoint).count()
     inc_dt = time.monotonic() - t
     t = time.monotonic()
-    full_rows = read_bucket_table(spark, path).count()
+    full_rows = read_bucket_table_versioned(spark, path).count()
     full_dt = time.monotonic() - t
     results.append(
         {
-            "mode": "read_changed_since",
+            "mode": "read_changed_between",
             "rows_returned": inc_rows,
             "sec": round(inc_dt, 3),
             "full_scan_rows": full_rows,
@@ -167,81 +171,25 @@ def main() -> None:
     )
     print(json.dumps(results[-1]))
 
-    # ---- compaction: scoped merges rewrite whole buckets (1 file
-    # each), so fragment every 8th bucket with two appended shards
-    # first — the long-merge-history state compaction exists for —
-    # then measure the maintenance pass at this (rows, n_buckets)
-    # point (cost = listing all buckets + rewriting the fragmented 1/64)
-    frag = 0
-    for d in sorted(glob.glob(f"{path}/bucket=*"))[::64]:
-        shard = spark.read.parquet(d).limit(50)
-        shard.coalesce(1).write.mode("append").parquet(d)
-        shard.coalesce(1).write.mode("append").parquet(d)
-        frag += 1
-    t = time.monotonic()
-    cstats = compact_buckets(spark, path, max_files_per_bucket=1,
-                             min_files_to_compact=1)
-    dt = time.monotonic() - t
-    results.append({"mode": "compact_buckets", "buckets_fragmented": frag,
-                    "sec": round(dt, 3), **cstats})
-    print(json.dumps(results[-1]))
-
-    # ---- versioned commit premium: same 1500-row-rung merge through
-    # merge_scoped_versioned (immutable generations + manifest +
-    # pointer) on a fresh versioned copy of the table
-    vpath = f"{SCRATCH}/versioned"
-    t = time.monotonic()
-    write_bucket_table_versioned(base, vpath, key="o_orderkey",
-                                 n_buckets=N_BUCKETS)
-    vload_s = time.monotonic() - t
-    vbatch = (
-        orders.filter(F.col("o_orderkey") % 1_000 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
-    )
-    t = time.monotonic()
-    vstats = merge_scoped_versioned(spark, vpath, vbatch, now=T1)
-    dt = time.monotonic() - t
-    results.append(
-        {
-            "mode": "scoped_versioned",
-            "batch_rows": vbatch.count(),
-            "sec": round(dt, 3),
-            "initial_load_sec": round(vload_s, 3),
-            **vstats,
-        }
-    )
-    print(json.dumps(results[-1]))
-
-    # ---- versioned hot-bucket (zipf worst case through the VERSIONED
-    # path, r10 item 6): the same skewed shape as scoped_hot_bucket —
-    # every key in <=1% of the buckets — through merge_scoped_versioned,
-    # so the versioned commit's bound has the same two measured points
-    # as the in-place one: bytes_rewritten <= hot-set bytes, and skew
-    # REDUCES commit cost (fewer generation dirs, fewer manifest
-    # entries changed)
-    vuniform = results[-1]
-    vhot = (
+    # ---- compaction: copy-on-write merges leave one generation per
+    # bucket, so fragment every 64th bucket with two small delta
+    # merges first — the long-merge-history state compaction exists
+    # for — then measure the maintenance pass at this (rows, n_buckets)
+    # point (cost = folding the fragmented 1/64 of the buckets)
+    shard = (
         orders.withColumn("__b", bucket_expr("o_orderkey", N_BUCKETS))
-        .filter(F.col("__b") < hot_buckets)
+        .filter((F.col("__b") % 64 == 0) & (F.col("o_orderkey") % 100 == 0))
         .drop("__b")
-        .limit(vuniform["batch_rows"])
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(0.5))
     )
-    n_vhot = vhot.count()
+    for now in (T1, T2):
+        fstats = merge_scoped_versioned_mor(spark, path, shard, now=now)
     t = time.monotonic()
-    vhstats = merge_scoped_versioned(spark, vpath, vhot, now=T2)
+    cstats = compact_versioned(spark, path)
     dt = time.monotonic() - t
-    results.append(
-        {
-            "mode": "scoped_versioned_hot_bucket",
-            "hot_bucket_frac": hot_buckets / N_BUCKETS,
-            "batch_rows": n_vhot,
-            "sec": round(dt, 3),
-            "uniform_control_sec": vuniform["sec"],
-            "uniform_control_bytes": vuniform["bytes_rewritten"],
-            **vhstats,
-        }
-    )
+    results.append({"mode": "compact_versioned",
+                    "buckets_fragmented": fstats["buckets_touched"],
+                    "sec": round(dt, 3), **cstats})
     print(json.dumps(results[-1]))
 
     # ---- MERGE-ON-READ economics (round-10 addition): the same
@@ -249,11 +197,6 @@ def main() -> None:
     # ROWS (delta generations only), vs the CoW rungs above whose
     # bytes ∝ touched-bucket SIZE. Then the read-side debt (snapshot
     # wall with deltas standing) and the compaction that retires it.
-    from cvemate_spark.operators.merge_versioned import (
-        compact_versioned, merge_scoped_versioned_mor,
-        read_bucket_table_versioned,
-    )
-
     for mod, tag in ((100_000, "tiny"), (1_000, "rung")):
         mbatch = (
             orders.filter(F.col("o_orderkey") % mod == 0)
@@ -266,7 +209,7 @@ def main() -> None:
             None,
         )
         t = time.monotonic()
-        mstats = merge_scoped_versioned_mor(spark, vpath, mbatch, now=T2)
+        mstats = merge_scoped_versioned_mor(spark, path, mbatch, now=T2)
         dt = time.monotonic() - t
         results.append(
             {
@@ -285,13 +228,13 @@ def main() -> None:
         print(json.dumps(results[-1]))
     # read premium while deltas stand, then compaction retires it
     t = time.monotonic()
-    mor_read_rows = read_bucket_table_versioned(spark, vpath).count()
+    mor_read_rows = read_bucket_table_versioned(spark, path).count()
     mor_read_s = time.monotonic() - t
     t = time.monotonic()
-    cstats2 = compact_versioned(spark, vpath)
+    cstats2 = compact_versioned(spark, path)
     compact_s = time.monotonic() - t
     t = time.monotonic()
-    flat_read_rows = read_bucket_table_versioned(spark, vpath).count()
+    flat_read_rows = read_bucket_table_versioned(spark, path).count()
     flat_read_s = time.monotonic() - t
     results.append(
         {
